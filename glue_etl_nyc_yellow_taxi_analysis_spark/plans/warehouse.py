@@ -15,7 +15,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import read_table
-from ..sources.writers import Warehouse
+from ..sources.writers import JDBC_COLUMN_TYPE, Warehouse
 
 DIM_TABLES = [
     "dim_vendors",
@@ -26,6 +26,11 @@ DIM_TABLES = [
     "dim_date",
     "dim_time",
 ]
+
+# The fact's month keys as a JDBC warehouse creates them.  Spark would make
+# string columns Derby CLOBs, which cannot be compared with the guard's
+# pushed-down month filter.  Other warehouses ignore these types.
+FACT_KEY_TYPES = {"processed_year": "VARCHAR(4)", "processed_month": "VARCHAR(2)"}
 
 
 def load_star_to_warehouse(
@@ -57,21 +62,14 @@ def load_star_to_warehouse(
         else:
             wh.create(read_table(spark, database, t), t)
             actions[t] = "created"
-    fact = read_table(spark, database, fact_table).filter(
-        (F.col("processed_year") == processed_year)
-        & (F.col("processed_month") == processed_month)
+    in_month = (F.col("processed_year") == processed_year) & (
+        F.col("processed_month") == processed_month
     )
+    fact = read_table(spark, database, fact_table).filter(in_month)
+    for col, typ in FACT_KEY_TYPES.items():
+        fact = fact.withMetadata(col, {JDBC_COLUMN_TYPE: typ})
     if skip_if_loaded and wh.table_exists(fact_table):
-        already = (
-            wh.read(spark, fact_table)
-            .filter(
-                (F.col("processed_year") == processed_year)
-                & (F.col("processed_month") == processed_month)
-            )
-            .limit(1)
-            .count()
-        )
-        if already:
+        if wh.read(spark, fact_table).filter(in_month).limit(1).count():
             actions[fact_table] = (
                 f"skipped {processed_year}-{processed_month} (already loaded)"
             )

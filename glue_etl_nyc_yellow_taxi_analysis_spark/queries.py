@@ -29,7 +29,7 @@ from .operators import dedup, multimodal, sessionize, similarity, text
 from .operators.joins import anti_join, broadcast_dim_join, semi_join
 from .operators.transforms import dedup_exact
 from .plans import dims, star, warehouse
-from .sources.writers import ParquetWarehouse, write_partitioned_parquet
+from .sources.writers import write_partitioned_parquet
 
 
 TABLES_SQL_NAMES = (

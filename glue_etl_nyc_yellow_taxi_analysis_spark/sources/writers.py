@@ -5,14 +5,21 @@
 Postgres-over-JDBC load (Job 2) behind a tiny interface with two
 implementations: real JDBC when a driver jar is on the classpath, and a
 parquet-directory warehouse otherwise (same create/append semantics, so the
-load plan and its tests are environment-independent).
+load plan and its tests are environment-independent).  The JDBC existence
+probe is one zero-row schema query for every dialect, not the reference's
+``pg_catalog.pg_tables`` lookup.
 """
 
 from __future__ import annotations
 
 import os
 
+from py4j.protocol import Py4JJavaError
+from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame, SparkSession
+
+# column metadata key: the database type JdbcWarehouse creates the column as
+JDBC_COLUMN_TYPE = "jdbc_column_type"
 
 
 def write_partitioned_parquet(
@@ -36,9 +43,9 @@ def write_partitioned_parquet(
 class Warehouse:
     """Abstract warehouse sink: exists / create / append / read.
 
-    Mirrors Job 2's surface: probe ``pg_catalog.pg_tables`` (PG:62-67),
-    first-time ``write.jdbc`` create (PG:71, S8), incremental
-    ``mode("append").jdbc`` (PG:86-88, S9).
+    Mirrors Job 2's surface: table existence probe (PG:62-67), first-time
+    ``write.jdbc`` create (PG:71, S8), incremental ``mode("append").jdbc``
+    (PG:86-88, S9).
     """
 
     def table_exists(self, table: str) -> bool:
@@ -57,6 +64,17 @@ class Warehouse:
 class JdbcWarehouse(Warehouse):
     """Real JDBC warehouse (requires a driver jar, e.g. postgresql-*.jar).
 
+    One existence probe for every dialect: resolve the table's schema
+    through the reader ``read`` uses.  Spark's JDBC source runs
+    ``SELECT * FROM <table> WHERE 1=0`` on the driver, with no Spark job:
+    the kind of zero-row query Spark's JDBC writer makes before it creates a
+    table, so the probe resolves names (e.g. Postgres ``search_path``) as
+    the writer that acts on its answer does.
+
+    A column whose metadata carries ``JDBC_COLUMN_TYPE`` is created with
+    that database type (Spark's ``createTableColumnTypes``); Spark ignores
+    it once the table exists.
+
     Executors open parallel connections on write — size
     ``numPartitions``/``batchsize`` for the target DB at scale.
     """
@@ -66,82 +84,40 @@ class JdbcWarehouse(Warehouse):
         self.url = url
         self.properties = dict(properties or {})
 
-    @staticmethod
-    def dialect(url: str) -> str:
-        if url.startswith("jdbc:postgresql:"):
-            return "postgresql"
-        if url.startswith("jdbc:derby:"):
-            return "derby"
-        return "generic"
-
-    def catalog_probe_sql(self, table: str, schema: str = "public") -> str | None:
-        """Dialect-gated existence probe, shipped to the DB as a
-        subquery-as-table (S6 JDBC query pushdown).
-
-        On Postgres this is the reference's EXACT probe
-        (``etl-glue-load-to-postgres.py:62-66``): SELECT tablename FROM
-        pg_catalog.pg_tables filtered on schemaname/tablename.  On Derby
-        (the in-sandbox executor) the equivalent catalog is
-        ``SYS.SYSTABLES``.  ``None`` → unknown dialect, caller falls back
-        to the universal zero-row probe.
-        """
-        if any(c in table + schema for c in "'\";"):
-            raise ValueError(f"suspicious identifier: {table!r}/{schema!r}")
-        d = self.dialect(self.url)
-        if d == "postgresql":
-            return (
-                "(SELECT tablename FROM pg_catalog.pg_tables "
-                f"WHERE schemaname = '{schema}' AND tablename = '{table}')"
-            )
-        if d == "derby":
-            # Spark's write.jdbc ships unquoted identifiers to Derby, which
-            # normalizes them to uppercase in SYS.SYSTABLES
-            return (
-                "(SELECT TABLENAME FROM SYS.SYSTABLES "
-                f"WHERE TABLETYPE = 'T' AND TABLENAME = '{table.upper()}')"
-            )
-        return None
-
     def table_exists(self, table: str) -> bool:
-        probe_sql = self.catalog_probe_sql(table)
-        if probe_sql is not None:
-            # the reference's probe shape: catalog subquery pushed down,
-            # then a count() action (PG:62-67, S6+A1)
-            reader = (
-                self.spark.read.format("jdbc")
-                .option("url", self.url)
-                .option("dbtable", f"{probe_sql} probe_t")
-            )
-            for k, v in self.properties.items():
-                reader = reader.option(k, v)
-            return reader.load().count() > 0
-        # unknown dialect: zero-row probe — works on any DBMS (information
-        # schema layouts differ, but SELECT-WHERE-1=0 is universal and the
-        # schema fetch reads no rows)
-        probe = (
-            self.spark.read.format("jdbc")
-            .option("url", self.url)
-            .option("query", f"SELECT * FROM {table} WHERE 1 = 0")
-        )
-        for k, v in self.properties.items():
-            probe = probe.option(k, v)
+        if any(c in table for c in "'\";"):
+            raise ValueError(f"suspicious identifier: {table!r}")
         try:
-            probe.load().schema
+            self.read(self.spark, table)
             return True
-        except Exception:
+        except (Py4JJavaError, PySparkException):
+            # any database error reads as "missing", as in Spark's own writer
+            # (JdbcUtils.tableExists); a broken connection fails again on create
             return False
 
+    def _write(self, df: DataFrame, table: str, mode: str) -> None:
+        types = ", ".join(
+            f"{f.name} {f.metadata[JDBC_COLUMN_TYPE]}"
+            for f in df.schema.fields
+            if JDBC_COLUMN_TYPE in f.metadata
+        )
+        writer = df.write.mode(mode)
+        if types:
+            writer = writer.option("createTableColumnTypes", types)
+        writer.jdbc(self.url, table, properties=self.properties)
+
     def create(self, df: DataFrame, table: str) -> None:
-        df.write.jdbc(self.url, table, properties=self.properties)
+        self._write(df, table, "errorifexists")
 
     def append(self, df: DataFrame, table: str) -> None:
-        df.write.mode("append").jdbc(self.url, table, properties=self.properties)
+        self._write(df, table, "append")
 
     def read(self, spark: SparkSession, table: str) -> DataFrame:
-        reader = spark.read.format("jdbc").option("url", self.url).option("dbtable", table)
-        for k, v in self.properties.items():
-            reader = reader.option(k, v)
-        return reader.load()
+        return (
+            spark.read.format("jdbc")
+            .options(url=self.url, dbtable=table, **self.properties)
+            .load()
+        )
 
 
 class ParquetWarehouse(Warehouse):

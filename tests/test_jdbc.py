@@ -175,26 +175,3 @@ def test_jdbc_warehouse_probe_create_append(spark, sf_dir):
         assert wh.read(spark, "dim_nation").count() == 2 * n.count()
     finally:
         drop_derby_memory_db(spark, url)
-
-
-def test_dialect_gated_catalog_probe_sql(spark):
-    """The config seam provably emits the reference's Postgres probe SQL
-    (etl-glue-load-to-postgres.py:62-66) while Derby executes in-sandbox:
-    both dialects' probe strings are asserted, plus the generic fallback."""
-    from glue_etl_nyc_yellow_taxi_analysis_spark.sources.writers import JdbcWarehouse
-
-    pg = JdbcWarehouse(spark, "jdbc:postgresql://host:5432/nyc")
-    assert pg.catalog_probe_sql("dim_vendors") == (
-        "(SELECT tablename FROM pg_catalog.pg_tables "
-        "WHERE schemaname = 'public' AND tablename = 'dim_vendors')"
-    )
-    derby = JdbcWarehouse(spark, "jdbc:derby:memory:x;create=true")
-    assert derby.catalog_probe_sql("dim_vendors") == (
-        "(SELECT TABLENAME FROM SYS.SYSTABLES "
-        "WHERE TABLETYPE = 'T' AND TABLENAME = 'DIM_VENDORS')"
-    )
-    assert JdbcWarehouse(spark, "jdbc:mysql://h/db").catalog_probe_sql("t") is None
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        pg.catalog_probe_sql("t'; DROP TABLE x --")

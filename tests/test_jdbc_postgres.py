@@ -3,7 +3,8 @@
 The Derby-backed driver queries (q_warehouse_roundtrip / q_warehouse_load_plan)
 prove the JDBC surface; THIS test proves the PostgreSQL dialect itself —
 the reference Job 2's actual target (`etl-glue-load-to-postgres.py:22-88`):
-the pg_catalog.pg_tables probe SQL, and the type mapping of the star
+the zero-row existence probe (the reference used pg_catalog.pg_tables)
+resolving table names as the writer does, and the type mapping of the star
 contract (numeric(10,2) money, real fares, integer codes) on write and
 read-back.
 

@@ -1,15 +1,62 @@
 """Warehouse-load semantics + multimodal binary plumbing."""
 
+import shutil
 import tempfile
+import uuid
+from urllib.parse import urlparse
 
+import pytest
 from pyspark.sql import functions as F
 
+from glue_etl_nyc_yellow_taxi_analysis_spark import catalog
 from glue_etl_nyc_yellow_taxi_analysis_spark.operators import multimodal
-from glue_etl_nyc_yellow_taxi_analysis_spark.sources.writers import ParquetWarehouse
+from glue_etl_nyc_yellow_taxi_analysis_spark.plans import star
+from glue_etl_nyc_yellow_taxi_analysis_spark.plans.warehouse import load_star_to_warehouse
+from glue_etl_nyc_yellow_taxi_analysis_spark.queries import _taxi_fixture
+from glue_etl_nyc_yellow_taxi_analysis_spark.sources.config import (
+    DERBY_DRIVER,
+    drop_derby_memory_db,
+)
+from glue_etl_nyc_yellow_taxi_analysis_spark.sources.writers import (
+    JdbcWarehouse,
+    ParquetWarehouse,
+)
+
+FACT = "fact_uber_trips"
 
 
-def test_warehouse_create_append_read(spark, sf_dir):
-    wh = ParquetWarehouse(tempfile.mkdtemp(prefix="sg_test_wh_"))
+@pytest.fixture
+def derby(spark):
+    """A fresh in-memory Derby ``JdbcWarehouse``, dropped afterwards."""
+    url = f"jdbc:derby:memory:sg_test_{uuid.uuid4().hex[:12]};create=true"
+    yield JdbcWarehouse(spark, url, {"driver": DERBY_DRIVER})
+    drop_derby_memory_db(spark, url)
+
+
+@pytest.fixture(scope="module")
+def star_db(spark):
+    """Catalog database with the dims and fact months 2021-1 and 2021-2."""
+    db = "sg_test_wh_load"
+    spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
+    root = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
+    shutil.rmtree(f"{root}/{db}.db", ignore_errors=True)
+    star.ensure_dimensions(spark, db)
+    raw = _taxi_fixture(spark)
+    for month in ("1", "2"):
+        catalog.save_table(
+            star.build_fact(raw, "2021", month), db, FACT,
+            partition_by=["processed_year", "processed_month"],
+        )
+    yield db
+    spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
+
+
+@pytest.mark.parametrize("kind", ["parquet", "derby"])
+def test_warehouse_create_append_read(spark, sf_dir, kind, request):
+    if kind == "parquet":
+        wh = ParquetWarehouse(tempfile.mkdtemp(prefix="sg_test_wh_"))
+    else:
+        wh = request.getfixturevalue("derby")
     nation = spark.read.parquet(f"{sf_dir}/nation.parquet")
     assert not wh.table_exists("dim_nation")
     wh.create(nation, "dim_nation")
@@ -17,6 +64,52 @@ def test_warehouse_create_append_read(spark, sf_dir):
     assert wh.read(spark, "dim_nation").count() == 25
     wh.append(nation, "dim_nation")
     assert wh.read(spark, "dim_nation").count() == 50  # append, not overwrite
+
+
+def test_jdbc_table_exists_rejects_suspicious_identifier(spark):
+    wh = JdbcWarehouse(spark, "jdbc:derby:memory:sg_never_opened")
+    with pytest.raises(ValueError):
+        wh.table_exists("t'; DROP TABLE x --")
+
+
+def test_skip_if_loaded_guard_on_derby(spark, star_db, derby):
+    """The default guard skips a re-run month: the fact's month keys are
+    created as VARCHAR, so Derby accepts the pushed-down month filter
+    (CLOB keys made the guard fail from the second month on)."""
+    assert load_star_to_warehouse(spark, derby, star_db, "2021", "1")[FACT] == "appended 2021-1"
+    assert load_star_to_warehouse(spark, derby, star_db, "2021", "2")[FACT] == "appended 2021-2"
+    rows = derby.read(spark, FACT).count()
+    again = load_star_to_warehouse(spark, derby, star_db, "2021", "1")
+    assert again[FACT] == "skipped 2021-1 (already loaded)"
+    assert derby.read(spark, FACT).count() == rows == 2 * 201
+    assert dict(derby.read(spark, FACT).dtypes)["processed_month"] == "string"
+
+
+def _spark_jobs(spark, fn) -> int:
+    """Number of Spark jobs ``fn()`` launches (status-tracker job group)."""
+    sc = spark.sparkContext
+    group = f"sg_test_jobs_{uuid.uuid4().hex[:12]}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_month_load_job_count_ratchet(spark, star_db, derby):
+    """A month load into a warehouse whose dims exist launches one Spark
+    job, the fact append: the seven table probes run on the driver."""
+    load_star_to_warehouse(spark, derby, star_db, "2021", "1", skip_if_loaded=False)
+    jobs = _spark_jobs(
+        spark,
+        lambda: load_star_to_warehouse(
+            spark, derby, star_db, "2021", "2", skip_if_loaded=False
+        ),
+    )
+    assert jobs == 1
 
 
 def test_multimodal_resize_and_frames(spark, sf_dir):

@@ -1,13 +1,14 @@
 """Execute the warehouse path against a REAL PostgreSQL server once.
 
 The engine's `JdbcWarehouse` runs the reference Job-2 surface
-(`etl-glue-load-to-postgres.py:62-88`): pg_catalog existence probe,
-first-time `write.jdbc` create, `mode("append")` incremental load, JDBC
-read-back.  The in-repo driver gate executes it against embedded Derby
-(always available); THIS script points the identical code at Postgres so
-the pg dialect itself — the `pg_catalog.pg_tables` probe SQL and the JDBC
-type mapping of the star contract (DecimalType(10,2) money, double fares,
-timestamps, bigint keys) — has actually run (VERDICT r3 item 5).
+(`etl-glue-load-to-postgres.py:62-88`): zero-row existence probe (the
+same one on every dialect), first-time `write.jdbc` create,
+`mode("append")` incremental load, JDBC read-back.  The in-repo correctness
+gate executes it against embedded Derby (always available); THIS script
+points the identical code at Postgres to run the pg dialect itself —
+table name resolution through `search_path` and the JDBC type mapping of
+the star contract (DecimalType(10,2) money, double fares, timestamps,
+bigint keys) (VERDICT r3 item 5).
 
 Run in a FRESH process (the driver jar must be on the JVM classpath at
 session creation):
@@ -61,13 +62,13 @@ def main() -> int:
     fact = star.build_fact(_taxi_fixture(spark), "2021", "1")
     n = fact.count()
 
-    report: dict = {"dialect": wh.dialect(url), "rows": n}
-    assert report["dialect"] == "postgresql", report
+    report: dict = {"rows": n}
+    assert url.startswith("jdbc:postgresql:"), url
 
     # probe(false) -> create -> probe(true) -> append -> read-back
     assert wh.table_exists(table) is False, "probe must miss before create"
     wh.create(fact, table)
-    assert wh.table_exists(table) is True, "pg_catalog probe must hit"
+    assert wh.table_exists(table) is True, "probe must hit after create"
     wh.append(fact, table)
     back = wh.read(spark, table)
     report["rows_back"] = back.count()
